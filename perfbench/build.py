@@ -10,13 +10,15 @@ Usage: python3 perfbench/build.py   (from the repository root)
 2. Generates the gate workloads' read-only input: the program's GenFixture
    tables at multiplier 0.1 (sf0.1 row counts) in .bench_build/fixture.
    GenFixture is seed-free, so one fixture serves every run of a build.
-3. Records a class-data-sharing archive (.bench_build/perfbench.jsa) from
-   one JVM that sets up every workload and runs its warm-up op. Every run
-   maps it, which takes about 5 s of class loading off each JVM's start.
-   If the JVM cannot record one, runs go without it.
+   The same JVM records a class-data-sharing archive of the classes it
+   loaded (.bench_build/perfbench.jsa: Spark SQL, parquet and the program's
+   session). Every run maps it, which takes seconds of class loading off
+   each JVM's start. The build fails if either is missing, so every run of
+   a build has the same JVM set-up.
 
-The steps are skipped when a stamp over every source file's path and
-content matches the last build's, so only the first run in a checkout pays.
+The steps are skipped when a stamp over every input's path and content
+(the program's sources and resources, the benchmark's sources and this
+file) matches the last build's, so only the first run in a checkout pays.
 This module also holds the pinned JVM settings every run uses.
 """
 import hashlib
@@ -52,9 +54,13 @@ def sources():
     return prog + own
 
 
+def resources():
+    return sorted(p for p in (ROOT / "src" / "main" / "resources").rglob("*") if p.is_file())
+
+
 def stamp():
     h = hashlib.sha256()
-    for p in sources():
+    for p in sources() + resources() + [Path(__file__).resolve()]:
         h.update(str(p.relative_to(ROOT)).encode())
         h.update(p.read_bytes())
     return h.hexdigest()
@@ -66,10 +72,12 @@ def task_threads():
     return max(1, min(4, len(os.sched_getaffinity(0))))
 
 
-def jvm(run_dir: Path, main_class: str, args):
+def jvm(run_dir: Path, main_class: str, args, cds=f"-XX:SharedArchiveFile={ARCHIVE}"):
     """(command, environment) running `main_class` with the pinned settings:
-    fixed heap, at most 4 task threads, and every scratch, spill and temp
-    file of the program under `run_dir`."""
+    fixed heap, at most 4 task threads, the build's class-data-sharing
+    archive, and every scratch, spill and temp file of the program under
+    `run_dir`. `cds` replaces the archive option (the build step that
+    records the archive passes -XX:ArchiveClassesAtExit)."""
     for d in ("scratch", "tmp", "blocks"):
         (run_dir / d).mkdir(parents=True, exist_ok=True)
     env = {k: v for k, v in os.environ.items()
@@ -83,8 +91,7 @@ def jvm(run_dir: Path, main_class: str, args):
     # -XX:-UsePerfData: no hsperfdata file in the system temp directory
     cmd = (["java", "-XX:-UsePerfData", f"-Xms{HEAP}", f"-Xmx{HEAP}", "-Xss16m"] + ADD_OPENS +
            [f"-Djava.io.tmpdir={run_dir / 'tmp'}", "-Dspark.ui.enabled=false"] +
-           ([f"-XX:SharedArchiveFile={ARCHIVE}", "-Xlog:cds=off", "-Xlog:cds+dynamic=off"]
-            if ARCHIVE.exists() else []) +
+           [cds, "-Xlog:cds=off", "-Xlog:cds+dynamic=off"] +
            ["-cp", os.pathsep.join([str(JAR), str(SPARK_JARS / "*")]), main_class] + list(args))
     return cmd, env
 
@@ -103,61 +110,37 @@ def compile_jar():
         sys.stderr.write(r.stdout[-8000:])
         raise SystemExit("perfbench: compilation failed")
     with zipfile.ZipFile(JAR, "w", zipfile.ZIP_DEFLATED) as z:
-        for base in (classes, ROOT / "src" / "main" / "resources"):
-            for p in sorted(base.rglob("*")):
-                if p.is_file():
-                    z.write(p, p.relative_to(base).as_posix())
+        for p in sorted(p for p in classes.rglob("*") if p.is_file()):
+            z.write(p, p.relative_to(classes).as_posix())
+        for p in resources():
+            z.write(p, p.relative_to(ROOT / "src" / "main" / "resources").as_posix())
     shutil.rmtree(classes)
-
-
-def run_build_jvm(name, main_class, args, extra=()):
-    """Runs one build-step JVM in a scratch directory; returns its exit code."""
-    work = BUILD / f"{name}-work"
-    shutil.rmtree(work, ignore_errors=True)
-    cmd, env = jvm(work, main_class, args)
-    cmd = cmd[:1] + list(extra) + cmd[1:]
-    with open(BUILD / f"{name}.log", "w") as log:
-        code = subprocess.run(cmd, cwd=work, env=env, stdout=log,
-                              stderr=subprocess.STDOUT).returncode
-    shutil.rmtree(work, ignore_errors=True)
-    return code
 
 
 def generate_fixture():
     shutil.rmtree(FIXTURE, ignore_errors=True)
-    code = run_build_jvm("fixture", "graft.sources.GenFixture",
-                         [str(FIXTURE), FIXTURE_MULTIPLIER])
-    if code != 0 or not (FIXTURE / "_GRAFT_GEN_OK").exists():
+    work = BUILD / "fixture-work"
+    shutil.rmtree(work, ignore_errors=True)
+    cmd, env = jvm(work, "graft.sources.GenFixture", [str(FIXTURE), FIXTURE_MULTIPLIER],
+                   cds=f"-XX:ArchiveClassesAtExit={ARCHIVE}")
+    with open(BUILD / "fixture.log", "w") as log:
+        code = subprocess.run(cmd, cwd=work, env=env, stdout=log,
+                              stderr=subprocess.STDOUT).returncode
+    shutil.rmtree(work, ignore_errors=True)
+    if code != 0 or not (FIXTURE / "_GRAFT_GEN_OK").exists() or not ARCHIVE.exists():
         sys.stderr.write((BUILD / "fixture.log").read_text()[-6000:])
-        raise SystemExit("perfbench: fixture generation failed")
-
-
-def record_archive():
-    root = BUILD / "archive-root"
-    shutil.rmtree(root, ignore_errors=True)
-    code = run_build_jvm(
-        "archive", "perfbench.Main",
-        ["--workload", "cycle_steady,backfill_clip,gates",
-         "--seed", "0", "--ops", "0", "--warmup", "1", "--trace", "0",
-         "--root", str(root), "--out", str(root / "result.json"),
-         "--fixture", str(FIXTURE)],
-        extra=[f"-XX:ArchiveClassesAtExit={ARCHIVE}"])
-    shutil.rmtree(root, ignore_errors=True)
-    if code != 0:
-        ARCHIVE.unlink(missing_ok=True)
-        sys.stderr.write("perfbench: no class-data-sharing archive; runs go without\n")
+        raise SystemExit("perfbench: fixture generation or class-data-sharing archive failed")
 
 
 def build():
     st = stamp()
-    if STAMP.exists() and STAMP.read_text() == st and JAR.exists():
+    if STAMP.exists() and STAMP.read_text() == st and JAR.exists() and ARCHIVE.exists():
         return
     STAMP.unlink(missing_ok=True)
     ARCHIVE.unlink(missing_ok=True)
     BUILD.mkdir(exist_ok=True)
     compile_jar()
     generate_fixture()
-    record_archive()
     STAMP.write_text(st)
 
 

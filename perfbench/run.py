@@ -27,21 +27,16 @@ from pathlib import Path
 sys.path.insert(0, str(Path(__file__).resolve().parent))
 import build  # noqa: E402
 
-# Ops per run: untimed warm-up ops, then timed ops. The timed count is
-# --seconds over a nominal op time at 4 task threads (within bounds); it
-# depends only on --seconds, so every run of a workload makes the same ops
-# on the same history depth.
-WORKLOADS = {
-    "cycle_steady": {"warmup": 1, "op_s": 3.3, "min_ops": 3, "max_ops": 11},
-    "backfill_clip": {"warmup": 1, "op_s": 3.3, "min_ops": 3, "max_ops": 11},
-    "gates": {"warmup": 1, "op_s": 3.3, "min_ops": 3, "max_ops": 20},
-}
+# Timed ops per run: --seconds over the workload's nominal op time at 4
+# task threads, at least 3 (a median needs them) and at most 12 (the JVM
+# must end within JVM_TIMEOUT_S). The count depends only on --seconds, so
+# every run of a workload makes the same ops on the same history depth.
+OP_SECONDS = {"cycle_steady": 3.0, "backfill_clip": 4.0, "gates": 7.5}
 JVM_TIMEOUT_S = 160
 
 
 def op_count(workload: str, seconds: int) -> int:
-    w = WORKLOADS[workload]
-    return max(w["min_ops"], min(w["max_ops"], round(seconds / w["op_s"])))
+    return max(3, min(12, round(seconds / OP_SECONDS[workload])))
 
 
 def run_jvm(workload, seed, ops, trace, run_dir, check_only=False):
@@ -50,7 +45,7 @@ def run_jvm(workload, seed, ops, trace, run_dir, check_only=False):
     out = run_dir / ("check.json" if check_only else "result.json")
     cmd, env = build.jvm(run_dir, "perfbench.Main", [
         "--workload", workload, "--seed", str(seed), "--ops", str(ops),
-        "--warmup", str(WORKLOADS[workload]["warmup"]), "--trace", "1" if trace else "0",
+        "--trace", "1" if trace else "0",
         "--root", str(run_dir / "root"), "--out", str(out),
         "--fixture", str(build.FIXTURE)] + (["--check-only"] if check_only else []))
     log = open(run_dir / "jvm.log", "w")
@@ -86,7 +81,7 @@ def gate_problems(run_dir):
 
 def main():
     ap = argparse.ArgumentParser()
-    ap.add_argument("--workload", required=True, choices=sorted(WORKLOADS))
+    ap.add_argument("--workload", required=True, choices=sorted(OP_SECONDS))
     ap.add_argument("--seed", type=int, required=True)
     ap.add_argument("--seconds", type=int, required=True)
     ap.add_argument("--trace", type=int, choices=(0, 1), default=0)

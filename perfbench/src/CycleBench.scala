@@ -16,9 +16,10 @@ import graft.sources.{AfricaShp, Grib1}
 
 /** The two ingestion-cycle workloads.
   *
-  * `Steady`: the service's day-to-day path. Set-up lands `SteadyYears`
-  * years of monthly GRIB1 files (both variables, 0.25 degree AOI lattice)
-  * and memoizes all 12 calendar-month normals of both variables through
+  * `Steady`: the service's day-to-day path. Set-up lands monthly GRIB1
+  * files (both variables, 0.5 degree AOI lattice) of the normal window's
+  * `SteadyYears` years, for the calendar months the run's cycles reach,
+  * and memoizes those months' normals of both variables through
   * `Normals.getOrCompute`. One op lands the next month's GRIB1 file with
   * `Grib1.landToGrid` and runs one `Cycle.run` (outputs and GeoTIFFs
   * published) over a fresh `GridSource` on the re-read landed grid.
@@ -69,7 +70,8 @@ final class CycleBench(spark: SparkSession, root: String, seed: Long, kind: Cycl
   private val lattice = Lattice(if (steady) SteadyStepMilli else BackfillStepMilli)
   private val years = if (steady) SteadyYears else BackfillYears
   private val (y0, y1) = (FirstYear, FirstYear + years - 1)
-  private val histMonths = 12 * years
+  /** Months of the normal window; the steady run's first cursor is the month after. */
+  private val yearsMonths = 12 * years
   private val vars = Fields.variables(seed)
   private val first = LocalDate.of(FirstYear, 1, 1)
   private val gridDir = s"$root/grid"
@@ -79,7 +81,7 @@ final class CycleBench(spark: SparkSession, root: String, seed: Long, kind: Cycl
   private def liveCells: Int = mask.count(identity)
 
   /** Month index (from January of FirstYear) of op k's cursor. */
-  private def cursorIndex(k: Int): Int = if (steady) histMonths + k else k
+  private def cursorIndex(k: Int): Int = if (steady) yearsMonths + k else k
   private def monthAt(idx: Int): LocalDate = first.plusMonths(idx.toLong)
 
   private val cursors = scala.collection.mutable.ArrayBuffer[Option[String]]()
@@ -108,7 +110,7 @@ final class CycleBench(spark: SparkSession, root: String, seed: Long, kind: Cycl
 
   def setup(): Unit = {
     Files.createDirectories(Paths.get(root))
-    (0 until histMonths).foreach(gribFile(s"$root/in/history", _))
+    historyMonths.foreach(gribFile(s"$root/in/history", _))
     if (steady) (0 until plannedOps).foreach(k => gribFile(s"$root/in/op-$k", cursorIndex(k)))
     Main.log("GRIB1 inputs written")
     Grib1.landToGrid(spark, s"$root/in/history", gridDir)
@@ -129,10 +131,18 @@ final class CycleBench(spark: SparkSession, root: String, seed: Long, kind: Cycl
       finally pool.shutdown()
       val normals = built.flatten.groupBy(_._1).map { case (v, ms) => v -> ms.flatMap(_._2).toMap }
       StateStore.writeJsonAtomic(s"$root/state/grid.json",
-        SourceState(date = Some(iso(monthAt(histMonths - 1))), normals = normals))
+        SourceState(date = Some(iso(monthAt(yearsMonths - 1))), normals = normals))
       Main.log("normals memoized")
     } else mask // the lattice mask is the checks' own; build it before timing
   }
+
+  /** Month indices landed in set-up. The steady run lands only the months
+    * of FirstYear its normals are built from, the calendar months its
+    * cycles reach, so its history is as deep in every run of a given
+    * length and set-up stays short; the backfill run lands whole years.
+    */
+  private def historyMonths: Seq[Int] =
+    if (steady) steadyNormalMonths.map(_ - 1) else 0 until yearsMonths
 
   /** Calendar months of the steady run's cycles (all of them from a year of ops on). */
   private def steadyNormalMonths: Seq[Int] =

@@ -10,8 +10,8 @@ import org.apache.spark.sql.SparkSession
   * JSON to `--out`. `perfbench/run.py` launches this class; see
   * `perfbench/README.md` for the workloads and metrics.
   *
-  * Usage: perfbench.Main --workload W --seed N --ops K --warmup K0
-  *          --trace 0|1 --root DIR --out FILE [--fixture DIR] [--check-only]
+  * Usage: perfbench.Main --workload W --seed N --ops K --trace 0|1
+  *          --root DIR --out FILE [--fixture DIR] [--check-only]
   *
   * With `--trace 0` nothing is attached to Spark and only the end-to-end
   * metrics are reported. With `--trace 1` a [[Tracer]] attaches Spark's
@@ -37,6 +37,9 @@ object Main {
     def layerMetrics(): Seq[(String, Double, String)] = Nil
   }
 
+  /** Untimed warm-up ops before the timed ones. */
+  val Warmup = 1
+
   private val cpuBean = ManagementFactory.getOperatingSystemMXBean
     .asInstanceOf[com.sun.management.OperatingSystemMXBean]
 
@@ -60,7 +63,6 @@ object Main {
     val workloadName = opts("workload")
     val seed = opts("seed").toLong
     val ops = opts("ops").toInt
-    val warmup = opts.getOrElse("warmup", "1").toInt
     val trace = opts.getOrElse("trace", "0") == "1"
     val root = opts("root")
     val out = opts("out")
@@ -69,46 +71,32 @@ object Main {
     val t0 = System.nanoTime()
     val spark = graft.Session.build("perfbench-" + workloadName)
     val tracer = if (trace) Some(new Tracer(spark)) else None
-    def workload(name: String, root: String): Workload = name match {
+    val w: Workload = workloadName match {
       case "cycle_steady" => new CycleBench(spark, root, seed, CycleBench.Steady, tracer)
       case "backfill_clip" => new CycleBench(spark, root, seed, CycleBench.Backfill, tracer)
       case "gates" => new GateBench(spark, root, opts("fixture"), tracer)
       case other => throw new IllegalArgumentException(s"unknown workload $other")
     }
 
-    if (workloadName.contains(",")) {
-      // class-loading run for the build's class-data-sharing archive: set
-      // up each listed workload and run its warm-up ops, nothing else
-      workloadName.split(",").foreach { name =>
-        val w = workload(name, s"$root/$name")
-        w.plan(warmup)
-        w.setup()
-        (0 until warmup).foreach(w.op)
-      }
-      spark.stop()
-      return
-    }
-    val w = workload(workloadName, root)
-
     if (checkOnly) {
-      val problems = w.check(warmup + ops)
+      val problems = w.check(Warmup + ops)
       writeResult(out, problems, 0, 0, Nil)
       spark.stop()
       return
     }
 
-    w.plan(warmup + ops)
+    w.plan(Warmup + ops)
     log("session built")
     w.setup()
     log("set-up done")
-    (0 until warmup).foreach { k => w.op(k); System.gc() }
+    (0 until Warmup).foreach { k => w.op(k); System.gc() }
     log("warm-up done")
     val setupS = (System.nanoTime() - t0) / 1e9
 
     val walls = Seq.newBuilder[Double]
     val cpus = Seq.newBuilder[Double]
     val layers = Seq.newBuilder[Seq[(String, Double, String)]]
-    (warmup until warmup + ops).foreach { k =>
+    (Warmup until Warmup + ops).foreach { k =>
       // quiesce outside the timed region so one op's garbage is not
       // charged to the next
       System.gc()
@@ -121,7 +109,7 @@ object Main {
       if (trace) layers += w.layerMetrics()
     }
 
-    val problems = w.check(warmup + ops)
+    val problems = w.check(Warmup + ops)
     log(s"checked: ${problems.size} problems")
     // several collections: the first frees the weak references whose
     // cleanup (Spark's ContextCleaner) releases more on the next

@@ -8,9 +8,8 @@ Usage (from the repository root):
   python3 perfbench/steadiness.py [--runs 10] [--workloads a,b] [--seconds N]
 
 A pair is marked "ok" when both spreads are within the metric's bound in
-BENCHMARK.json (setup_s excepted, whose spread has no bound) and B's
-median is no worse than A's by more than the bound. The share of failed
-ops must be identical in the two sets.
+BENCHMARK.json and B's median is no worse than A's by more than the
+bound. The share of failed ops must be identical in the two sets.
 """
 import argparse
 import json
@@ -75,7 +74,7 @@ def main():
             a = stats([r["metrics"][m]["value"] for r in results[(w, "A")]])
             b = stats([r["metrics"][m]["value"] for r in results[(w, "B")]])
             ratio = b[0] / a[0]
-            ok = ratio <= 1 + bound and (m == "setup_s" or max(a[3], b[3]) <= bound)
+            ok = ratio <= 1 + bound and max(a[3], b[3]) <= bound
             all_ok &= ok
             print(f"| {w} | {m} | {a[0]:.4g} | {a[1]:.4g}..{a[2]:.4g} | {a[3]:.3f} "
                   f"| {b[0]:.4g} | {b[1]:.4g}..{b[2]:.4g} | {b[3]:.3f} | {ratio:.3f} "
