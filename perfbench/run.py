@@ -28,15 +28,17 @@ sys.path.insert(0, str(Path(__file__).resolve().parent))
 import build  # noqa: E402
 
 # Timed ops per run: --seconds over the workload's nominal op time at 4
-# task threads, at least 3 (a median needs them) and at most 12 (the JVM
+# task threads, at least 3 (a median needs them) and at most MAX_OPS (a
+# cycle run may make 12 ops in all, one per calendar month, and the JVM
 # must end within JVM_TIMEOUT_S). The count depends only on --seconds, so
 # every run of a workload makes the same ops on the same history depth.
-OP_SECONDS = {"cycle_steady": 3.0, "backfill_clip": 4.0, "gates": 7.5}
+OP_SECONDS = {"cycle": 4.2, "gates": 7.0}
+MAX_OPS = 10
 JVM_TIMEOUT_S = 160
 
 
 def op_count(workload: str, seconds: int) -> int:
-    return max(3, min(12, round(seconds / OP_SECONDS[workload])))
+    return max(3, min(MAX_OPS, round(seconds / OP_SECONDS[workload])))
 
 
 def run_jvm(workload, seed, ops, trace, run_dir, check_only=False):

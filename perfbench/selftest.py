@@ -4,13 +4,12 @@ output corrupted in the way it guards against.
 
 Usage (from the repository root): python3 perfbench/selftest.py
 
-1. cycle_steady runs one op and keeps its root; the checks pass on it.
+1. cycle runs one timed op and keeps its root; the checks pass on it.
    On copies of that root: one GeoTIFF cell is changed, one GeoTIFF is
    re-encoded without LZW and predictor, one month's layer (its GeoTIFF and
-   its parquet partition) is deleted. The checks must fail on each.
-2. backfill_clip runs one op; one cell outside the clip polygon is given a
-   value in a copy. The clip check must fail.
-3. gates runs one pass; one value of one row of one gate's result is
+   its parquet partition) is deleted, one cell outside the clip polygon is
+   given a value. The checks must fail on each.
+2. gates runs one timed pass; one value of one row of one gate's result is
    changed in a copy. The DuckDB oracle check must fail.
 Exits 1 if any check does not fail as it should.
 """
@@ -78,30 +77,29 @@ def main():
     build.build()
     runs = build.BUILD / "runs"
 
-    steady = finished("cycle_steady")
-    c = corrupted_copy(steady, "cell")
+    cycle = finished("cycle")
+    c = corrupted_copy(cycle, "cell")
     corrupt_tif("cell", first_tif(c / "root", "grid_temperature_2_m_anomaly"), c)
-    expect("GeoTIFF cell changed", recheck("cycle_steady", c), "differ from the closed form")
+    expect("GeoTIFF cell changed", recheck("cycle", c), "differ from the closed form")
 
-    c = corrupted_copy(steady, "tags")
+    c = corrupted_copy(cycle, "tags")
     corrupt_tif("plain", first_tif(c / "root", "grid_precipitation"), c)
-    expect("GeoTIFF without LZW/predictor", recheck("cycle_steady", c), "Compression=1 Predictor=1")
+    expect("GeoTIFF without LZW/predictor", recheck("cycle", c), "Compression=1 Predictor=1")
 
-    c = corrupted_copy(steady, "month")
+    c = corrupted_copy(cycle, "month")
     tif = first_tif(c / "root", "grid_precipitation_anomaly")
     year, month = tif.name.split("_")[1].split("-")[:2]
     tif.unlink()
     for part in (c / "root" / "outputs" / "grid_precipitation_anomaly").glob(
             f"variable=*/year={int(year)}/month={int(month)}"):
         shutil.rmtree(part)
-    problems = recheck("cycle_steady", c)
+    problems = recheck("cycle", c)
     expect("month's GeoTIFF deleted", problems, "missing")
     expect("month's parquet partition deleted", problems, "months")
 
-    backfill = finished("backfill_clip")
-    c = corrupted_copy(backfill, "clip")
+    c = corrupted_copy(cycle, "clip")
     corrupt_tif("outside", first_tif(c / "root", "grid_temperature_2_m"), c)
-    expect("live cell outside the clip", recheck("backfill_clip", c), "outside the clip polygon")
+    expect("live cell outside the clip", recheck("cycle", c), "outside the clip polygon")
 
     gates = finished("gates")
     c = corrupted_copy(gates, "row")

@@ -6,7 +6,7 @@ import java.time.LocalDate
 import scala.jdk.CollectionConverters._
 import scala.util.{Failure, Success}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.json4s._
 import org.json4s.jackson.JsonMethods
@@ -14,32 +14,27 @@ import org.json4s.jackson.JsonMethods
 import graft.control._
 import graft.sources.{AfricaShp, Grib1}
 
-/** The two ingestion-cycle workloads.
+/** The ingestion-cycle workload: the service's first year after its
+  * normal window, on the reference's AOI clipped to Africa.
   *
-  * `Steady`: the service's day-to-day path. Set-up lands monthly GRIB1
-  * files (both variables, 0.5 degree AOI lattice) of the normal window's
-  * `SteadyYears` years, for the calendar months the run's cycles reach,
-  * and memoizes those months' normals of both variables through
-  * `Normals.getOrCompute`. One op lands the next month's GRIB1 file with
-  * `Grib1.landToGrid` and runs one `Cycle.run` (outputs and GeoTIFFs
-  * published) over a fresh `GridSource` on the re-read landed grid.
-  *
-  * `Backfill`: the catch-up path. Set-up lands `BackfillYears` years on a
-  * coarser lattice; state starts cold. One op runs one `Cycle.run` over a
-  * `GridSource` whose grid is clipped by `GeoContains(AfricaShp.rings)`;
-  * every op's cursor is a new calendar month, so each op builds both
-  * variables' normals.
+  * Set-up writes the monthly GRIB1 files (both variables, `StepMilli` AOI
+  * lattice) of the `WindowYears` years of the normal window and of the
+  * months the run's ops reach, and lands the window; state starts cold.
+  * One op lands the next month's file with `Grib1.landToGrid` and runs one
+  * `Cycle.run` (parquet layers and GeoTIFFs published) over a fresh
+  * `GridSource` on the re-read landed grid clipped by
+  * `GeoContains(AfricaShp.rings)`. Every op's cursor is a new calendar
+  * month, so every op also builds both variables' normals of that month.
+  * One op thus crosses every layer of the cycle: GRIB1 decode and landing,
+  * the clip ray cast, the climatology scan, the parquet, GeoTIFF and binary
+  * publish, and the state commits.
   */
 object CycleBench {
-  sealed trait Kind
-  case object Steady extends Kind
-  case object Backfill extends Kind
-
   val FirstYear = 1991
-  val SteadyStepMilli = 500
-  val SteadyYears = 1
-  val BackfillStepMilli = 2000
-  val BackfillYears = 2
+  val StepMilli = 2000
+  val WindowYears = 1
+  /** Ops a run may make: one per calendar month, so each builds normals. */
+  val MaxOps = 12
 
   val registry: Seq[DatasetDef] = Seq(
     DatasetDef("grid-temperature-2-m", "TMP", "K", "K", anomaly = false),
@@ -62,26 +57,23 @@ object CycleBench {
   }
 }
 
-final class CycleBench(spark: SparkSession, root: String, seed: Long, kind: CycleBench.Kind,
+final class CycleBench(spark: SparkSession, root: String, seed: Long,
                        tracer: Option[Tracer]) extends Main.Workload {
   import CycleBench._
 
-  private val steady = kind == Steady
-  private val lattice = Lattice(if (steady) SteadyStepMilli else BackfillStepMilli)
-  private val years = if (steady) SteadyYears else BackfillYears
-  private val (y0, y1) = (FirstYear, FirstYear + years - 1)
-  /** Months of the normal window; the steady run's first cursor is the month after. */
-  private val yearsMonths = 12 * years
+  private val lattice = Lattice(StepMilli)
+  private val (y0, y1) = (FirstYear, FirstYear + WindowYears - 1)
+  /** Months of the normal window; op 0's cursor is the month after. */
+  private val windowMonths = 12 * WindowYears
   private val vars = Fields.variables(seed)
   private val first = LocalDate.of(FirstYear, 1, 1)
   private val gridDir = s"$root/grid"
   private lazy val rings: Seq[Array[(Double, Double)]] = AfricaShp.rings.toSeq
-  private lazy val mask: Array[Boolean] =
-    if (steady) Array.fill(lattice.cells)(true) else Fields.mask(lattice, rings)
+  private lazy val mask: Array[Boolean] = Fields.mask(lattice, rings)
   private def liveCells: Int = mask.count(identity)
 
   /** Month index (from January of FirstYear) of op k's cursor. */
-  private def cursorIndex(k: Int): Int = if (steady) yearsMonths + k else k
+  private def cursorIndex(k: Int): Int = windowMonths + k
   private def monthAt(idx: Int): LocalDate = first.plusMonths(idx.toLong)
 
   private val cursors = scala.collection.mutable.ArrayBuffer[Option[String]]()
@@ -94,59 +86,29 @@ final class CycleBench(spark: SparkSession, root: String, seed: Long, kind: Cycl
       vars.map(_.gribField(lattice, m.atStartOfDay())))
   }
 
-  private def landedGrid: DataFrame = {
-    val g = spark.read.parquet(gridDir).select("variable", "time", "lat", "lon", "value")
-    if (steady) g else g.where(graft.functions.GeoContains(rings)(col("lon"), col("lat")))
-  }
-
   private def source(): ForageSource = {
-    val gs = new GridSource(landedGrid, root, iso(first), (y0, y1))
+    val grid = spark.read.parquet(gridDir).select("variable", "time", "lat", "lon", "value")
+      .where(graft.functions.GeoContains(rings)(col("lon"), col("lat")))
+    val gs = new GridSource(grid, root, iso(monthAt(windowMonths)), (y0, y1))
     tracer.fold[ForageSource](gs)(t => new TimedSource(gs, t))
   }
 
-  /** Op count over the whole run, to pre-generate the steady ops' inputs. */
+  /** Op count over the whole run, to write the ops' inputs in set-up. */
   private var plannedOps = 0
-  override def plan(totalOps: Int): Unit = plannedOps = totalOps
+  override def plan(totalOps: Int): Unit = {
+    require(totalOps <= MaxOps, s"at most $MaxOps cycle ops, asked for $totalOps")
+    plannedOps = totalOps
+  }
 
   def setup(): Unit = {
     Files.createDirectories(Paths.get(root))
-    historyMonths.foreach(gribFile(s"$root/in/history", _))
-    if (steady) (0 until plannedOps).foreach(k => gribFile(s"$root/in/op-$k", cursorIndex(k)))
+    (0 until windowMonths).foreach(gribFile(s"$root/in/history", _))
+    (0 until plannedOps).foreach(k => gribFile(s"$root/in/op-$k", cursorIndex(k)))
     Main.log("GRIB1 inputs written")
     Grib1.landToGrid(spark, s"$root/in/history", gridDir)
     Main.log("history landed")
-    if (steady) {
-      // memoize, as a long-running service would have, the normal of every
-      // calendar month the run's cycles reach, for both variables; the
-      // builds run as concurrent Spark jobs
-      val grid = landedGrid
-      val pool = java.util.concurrent.Executors.newFixedThreadPool(4)
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutor(pool)
-      val built = try scala.concurrent.Await.result(scala.concurrent.Future.sequence(
-        for (v <- vars; m <- steadyNormalMonths) yield scala.concurrent.Future {
-          Normals.getOrCompute(spark, SourceState(), s"$root/normals",
-            grid.where(col("variable") === v.name), v.name, m, y0, y1)._2.normals
-        }), scala.concurrent.duration.Duration.Inf)
-      finally pool.shutdown()
-      val normals = built.flatten.groupBy(_._1).map { case (v, ms) => v -> ms.flatMap(_._2).toMap }
-      StateStore.writeJsonAtomic(s"$root/state/grid.json",
-        SourceState(date = Some(iso(monthAt(yearsMonths - 1))), normals = normals))
-      Main.log("normals memoized")
-    } else mask // the lattice mask is the checks' own; build it before timing
+    mask // the lattice mask is the checks' own; build it before timing
   }
-
-  /** Month indices landed in set-up. The steady run lands only the months
-    * of FirstYear its normals are built from, the calendar months its
-    * cycles reach, so its history is as deep in every run of a given
-    * length and set-up stays short; the backfill run lands whole years.
-    */
-  private def historyMonths: Seq[Int] =
-    if (steady) steadyNormalMonths.map(_ - 1) else 0 until yearsMonths
-
-  /** Calendar months of the steady run's cycles (all of them from a year of ops on). */
-  private def steadyNormalMonths: Seq[Int] =
-    (0 until math.min(plannedOps, 12)).map(k => monthAt(cursorIndex(k)).getMonthValue).sorted
 
   // per-op trace state
   private var landS = 0.0
@@ -166,10 +128,8 @@ final class CycleBench(spark: SparkSession, root: String, seed: Long, kind: Cycl
       opStartMs = System.currentTimeMillis()
     }
     val t0 = System.nanoTime()
-    if (steady) {
-      def land(): Int = Grib1.landToGrid(spark, s"$root/in/op-$k", gridDir)
-      tracer.fold(land())(_.inGroup("land")(land()))
-    }
+    def land(): Int = Grib1.landToGrid(spark, s"$root/in/op-$k", gridDir)
+    tracer.fold(land())(_.inGroup("land")(land()))
     val t1 = System.nanoTime()
     src = source()
     def cycle() = Cycle.run(root, src, registry, writeOutputs = true,
@@ -217,7 +177,7 @@ final class CycleBench(spark: SparkSession, root: String, seed: Long, kind: Cycl
     val tifs = published.filter(_.toString.endsWith(".tif"))
     val groups = Seq("land", "forage", "publish")
     def sum(key: String): Double = groups.map(delta(_, key)).sum.toDouble
-    val landedCells = if (steady) 2.0 * lattice.cells else 0.0
+    val landedCells = 2.0 * lattice.cells
     Seq(
       ("land.s", landS, "s"),
       ("land.cells_per_s", if (landS > 0) landedCells / landS else 0.0, "cells/s"),

@@ -72,6 +72,7 @@ final class GateBench(spark: SparkSession, root: String, fixture: String,
       tracer.fold(run())(_.inGroup(g)(run()))
       lastPass(g) = (System.nanoTime() - t0) / 1e9
     }
+    Main.log(gates.map(g => f"$g ${lastPass(g)}%.2f").mkString("pass: ", ", ", ""))
   }
 
   override def layerMetrics(): Seq[(String, Double, String)] = {

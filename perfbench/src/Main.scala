@@ -37,8 +37,11 @@ object Main {
     def layerMetrics(): Seq[(String, Double, String)] = Nil
   }
 
-  /** Untimed warm-up ops before the timed ones. */
-  val Warmup = 1
+  /** Untimed warm-up ops before the timed ones: the first op of a JVM
+    * takes three to four times as long as the ops after it, and the next
+    * still runs 20 to 50% slower than the ones that follow.
+    */
+  val Warmup = 2
 
   private val cpuBean = ManagementFactory.getOperatingSystemMXBean
     .asInstanceOf[com.sun.management.OperatingSystemMXBean]
@@ -72,8 +75,7 @@ object Main {
     val spark = graft.Session.build("perfbench-" + workloadName)
     val tracer = if (trace) Some(new Tracer(spark)) else None
     val w: Workload = workloadName match {
-      case "cycle_steady" => new CycleBench(spark, root, seed, CycleBench.Steady, tracer)
-      case "backfill_clip" => new CycleBench(spark, root, seed, CycleBench.Backfill, tracer)
+      case "cycle" => new CycleBench(spark, root, seed, tracer)
       case "gates" => new GateBench(spark, root, opts("fixture"), tracer)
       case other => throw new IllegalArgumentException(s"unknown workload $other")
     }
