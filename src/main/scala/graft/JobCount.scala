@@ -9,7 +9,7 @@ package graft
   * Exists because the round-14 iterative-operator work moves cost that
   * `.explain` cannot show: eager barriers execute at DataFrame BUILD
   * time, so a convergence job folded into a checkpoint action (see
-  * [[Session.zeroTestMarker]]) leaves the final physical plan
+  * [[Iterate.zeroTestMarker]]) leaves the final physical plan
   * bit-identical — the evidence is the per-query job count, which this
   * tool measures directly.
   *

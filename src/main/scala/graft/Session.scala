@@ -47,114 +47,6 @@ object Session {
     }
   }
 
-  /** Barrier applied every `spark.graft.barrierInterval`-th round of an
-    * iterative operator (default 4; ALS/GraphX ship the same knob as
-    * `checkpointInterval`, default 10). Rounds between barriers chain as
-    * ordinary narrow/shuffle stages inside one plan — shuffle outputs
-    * already give intra-job retry, so the reliability story at scale is
-    * unchanged; the interval only bounds plan depth and lineage length.
-    * Callers pass `round` as 1-based; the caller is responsible for ONLY
-    * using this on loops whose iterate is consumed ONCE per round (a
-    * linear chain) — a state consumed twice per round doubles the plan
-    * per unbarriered round instead.
-    */
-  def barrierEvery(round: Int, df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-    val interval = df.sparkSession.conf.getOption("spark.graft.barrierInterval")
-      .map(_.toInt).getOrElse(4)
-    if (interval <= 1 || round % interval == 0) barrier(df) else df
-  }
-
-  /** Accumulator-backed row marker for convergence ZERO-tests in iterative
-    * operators (round-14, optimization guide §1.2: remove whole passes):
-    * `mark(cond)` counts rows satisfying `cond` WHILE the enclosing action
-    * runs — so a loop that barriers its round state can read the
-    * convergence signal off the checkpoint job itself instead of paying a
-    * second job per round to re-scan the materialized state.
-    *
-    * The marker UDF is nondeterministic ON PURPOSE, for two reasons: the
-    * optimizer may not constant-fold/duplicate it, and — load-bearing —
-    * filters cannot be pushed below a Project containing a nondeterministic
-    * expression, so a `.withColumn("x", mark(cond)).where(keep)` evaluates
-    * `cond` on every PRE-filter row (how kCore/kTruss count dropped edges).
-    *
-    * The marked column must REMAIN in the schema the enclosing action
-    * materializes (e.g. stay in the checkpointed frame and be dropped
-    * only after the barrier): ColumnPruning deletes an unreferenced
-    * projection regardless of determinism — Spark assumes expressions
-    * are side-effect-free — and with it the accumulator updates.
-    *
-    * Only `== 0` tests are valid on the accumulator value: an eager
-    * reliable checkpoint executes its plan more than once (the count job +
-    * the checkpoint write job) and task retries/speculation re-add, so the
-    * value is an unreliable overcount — but it is EXACTLY 0 iff no row of
-    * any complete execution satisfied `cond`. Never compare it to a prior
-    * round's value or to a row count.
-    */
-  def zeroTestMarker(spark: SparkSession): (org.apache.spark.util.LongAccumulator,
-      org.apache.spark.sql.Column => org.apache.spark.sql.Column) = {
-    val acc = spark.sparkContext.longAccumulator("graft.zeroTest")
-    val f = org.apache.spark.sql.functions.udf { (b: Boolean) =>
-      if (b) acc.add(1L); b
-    }.asNondeterministic()
-    (acc, (c: org.apache.spark.sql.Column) => f(c))
-  }
-
-  /** Scoped round-state pinning for iterative operators (round-14,
-    * optimization guide §5): GraphX/ALS-style iteration storage —
-    * intermediate states are `persist`ed (executor-local, lineage kept,
-    * so a lost block recomputes through the cached ancestors), a
-    * reliable [[barrier]] lands every `spark.graft.barrierInterval`-th
-    * round to bound lineage/plan depth, and [[IterScope.seal]]
-    * checkpoints the final state then unpersists EVERY pinned
-    * intermediate. The explicit unpersist matters beyond memory: a
-    * cached plan left registered would be silently substituted by the
-    * CacheManager into any LATER query sharing the subtree —
-    * cross-query result reuse this engine must never do.
-    *
-    * vs the old barrier-per-round: an eager reliable checkpoint costs a
-    * dedicated job (~0.5 s at local[32]); a pinned state materializes as
-    * a side effect of whatever action the loop already runs (the
-    * convergence count, the final result job), so rounds between
-    * interval barriers cost zero extra jobs.
-    */
-  final class IterScope(spark: SparkSession) {
-    private val pinnedFrames =
-      scala.collection.mutable.ArrayBuffer[org.apache.spark.sql.DataFrame]()
-    private val interval = spark.conf.getOption("spark.graft.barrierInterval")
-      .map(_.toInt).getOrElse(4)
-
-    /** Pin a reused frame: persisted, unpersisted at [[seal]]. */
-    def pin(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-      df.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-      pinnedFrames += df
-      df
-    }
-
-    /** Pin a 1-based round's state; every `interval`-th round gets a
-      * reliable barrier instead (lineage/plan-depth bound).
-      */
-    def state(round: Int, df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-      if (interval <= 1 || round % interval == 0) barrier(df) else pin(df)
-
-    /** Materialize the result behind a reliable barrier, then release
-      * every pinned intermediate. Call exactly once, last.
-      */
-    def seal(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
-      val out = barrier(df)
-      pinnedFrames.foreach(_.unpersist(blocking = false))
-      pinnedFrames.clear()
-      out
-    }
-
-    /** Release pinned intermediates without a final barrier — for loops
-      * whose last state is already materialized behind one.
-      */
-    def release(): Unit = {
-      pinnedFrames.foreach(_.unpersist(blocking = false))
-      pinnedFrames.clear()
-    }
-  }
-
   /** Per-gate scratch directory for EPHEMERAL data: streaming landing
     * staging, streaming checkpoint locations, temp sinks, codec fixture
     * files — everything a gate creates and abandons inside one

@@ -1,6 +1,7 @@
 package graft.control
 
 import java.nio.file.{Files, Paths}
+import scala.jdk.CollectionConverters._
 import scala.util.Try
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.json4s._
@@ -154,13 +155,6 @@ object Cycle {
           else None
         }.toMap
       finally stream.close()
-    }
-  }
-
-  private implicit class IterOps[A](it: java.util.Iterator[A]) {
-    def asScala: Iterator[A] = new Iterator[A] {
-      def hasNext: Boolean = it.hasNext
-      def next(): A = it.next()
     }
   }
 }

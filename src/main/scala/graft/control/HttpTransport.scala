@@ -2,7 +2,7 @@ package graft.control
 
 import java.net.URI
 import java.net.http.{HttpClient, HttpRequest, HttpResponse}
-import java.nio.file.{Files, Path, StandardCopyOption}
+import java.nio.file.Path
 import java.time.Duration
 import org.json4s._
 import org.json4s.jackson.JsonMethods
@@ -85,10 +85,6 @@ final class HttpAsyncJobApi(baseUrl: String, resource: String,
     require(resp.statusCode() / 100 == 2, s"GET $location -> HTTP ${resp.statusCode()}")
     val contentType = resp.headers().firstValue("Content-Type").orElse("")
     val payload = Byteranges.payloadOf(resp.body(), contentType)
-    val tmp = dest.resolveSibling(dest.getFileName.toString + ".tmp")
-    Files.write(tmp, payload)
-    Files.move(tmp, dest, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-    dest
+    graft.AtomicFile.write(dest, payload)
   }
 }

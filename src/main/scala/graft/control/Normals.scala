@@ -20,7 +20,7 @@ object Normals {
     */
   def getOrCompute(spark: SparkSession, state: SourceState, normalsDir: String,
                    grid: DataFrame, variable: String, calMonth: Int,
-                   startYear: Int = 1991, endYear: Int = 2020): (DataFrame, SourceState) = {
+                   startYear: Int, endYear: Int): (DataFrame, SourceState) = {
     val monthKey = f"$calMonth%02d"
     state.normals.get(variable).flatMap(_.get(monthKey)) match {
       case Some(path) if Files.exists(Paths.get(path)) =>

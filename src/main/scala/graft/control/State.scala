@@ -1,6 +1,6 @@
 package graft.control
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 import org.json4s._
 import org.json4s.jackson.Serialization
 
@@ -51,28 +51,15 @@ object StateStore {
     else default
   }
 
-  /** K3: atomic JSON commit — serialize to a temp file in the same
-    * directory, then rename into place (atomic on one filesystem), the
-    * reference's write_json_atomically (src/utility.js:94-103). The
-    * `compress` flag only disables pretty-printing, replicating the
-    * reference's fake-brotli quirk (src/utility.js:82-87) — a `.br` name
-    * still holds plain JSON.
+  /** K3: atomic JSON commit — pretty-printed, written through
+    * [[graft.AtomicFile]], the reference's write_json_atomically
+    * (src/utility.js:94-103).
     */
-  def writeJsonAtomic[T <: AnyRef](path: String, value: T, compress: Boolean = false): Unit = {
-    val body =
-      if (compress) Serialization.write(value)
-      else Serialization.writePretty(value)
-    writeStringAtomic(path, body)
-  }
+  def writeJsonAtomic[T <: AnyRef](path: String, value: T): Unit =
+    writeStringAtomic(path, Serialization.writePretty(value))
 
-  def writeStringAtomic(path: String, body: String): Unit = {
-    val target = Paths.get(path)
-    Option(target.getParent).foreach(Files.createDirectories(_))
-    val tmp: Path = Files.createTempFile(target.getParent, ".graft-", ".tmp")
-    Files.write(tmp, body.getBytes("UTF-8"))
-    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
+  def writeStringAtomic(path: String, body: String): Unit =
+    graft.AtomicFile.write(Paths.get(path), body.getBytes("UTF-8"))
 
   /** A3: merge a new observation window into dataset state — running
     * min(start)/max(end) across cycles (typical_metadata,

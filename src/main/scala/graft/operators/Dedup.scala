@@ -801,7 +801,7 @@ object Dedup {
     * found by iterative min-label propagation (each round every doc takes
     * the minimum cluster label among itself and its neighbours) — the
     * standard large-scale CC shape: O(diameter) rounds of one
-    * shuffle-join + one aggregate each, with `localCheckpoint` cutting
+    * shuffle-join + one aggregate each, with a barrier per round cutting
     * lineage so round N's plan doesn't re-derive rounds 1..N−1. Near-dup
     * graphs are overwhelmingly tiny cliques (diameter ≤ 2-3), so this
     * converges in 2-4 rounds regardless of corpus size. Output: every doc
@@ -824,7 +824,7 @@ object Dedup {
     // undirected edges, both directions, deduped; propagation runs in
     // [[Graph.minLabelComponents]] — the shared CC kernel (one
     // shuffle-join + aggregate per round, own-label convergence signal,
-    // localCheckpoint barriers, require(converged))
+    // a barrier per round, loud failure when maxRounds runs out)
     val edges = pairs.select($"doc_a".as("src"), $"doc_b".as("dst"))
       .unionByName(pairs.select($"doc_b".as("src"), $"doc_a".as("dst")))
       .distinct()

@@ -364,47 +364,30 @@ object Graph {
     * neighbours: ONE shuffle-join + one aggregate, with the node's
     * previous label riding the union (tagged `own`) so the same
     * aggregate yields both the new label and the convergence signal —
-    * no second join per round. Rounds are barriered (localCheckpoint;
-    * reliable checkpoint when `spark.graft.checkpointDir` is set) so
-    * round N's plan never re-derives rounds 1..N−1. O(diameter) rounds;
+    * no second join per round; convergence is a zero test on changed
+    * labels ([[graft.Iterate.untilZero]]). O(diameter) rounds;
     * the match/near-dup graphs these callers build are tiny cliques, so
-    * 2-4 rounds regardless of corpus size. A component with diameter >
-    * maxRounds would silently return plausible-looking half-propagated
-    * labels — `require(converged)` fails loudly instead.
+    * 2-4 rounds regardless of corpus size.
     */
   def minLabelComponents(edges: DataFrame, init: DataFrame,
                          maxRounds: Int = 20): DataFrame = {
-    val spark = edges.sparkSession
     val e = graft.Session.barrier(edges.select(col("src"), col("dst")))
-    var labels = graft.Session.barrier(init.select(col("node"), col("label")))
-    var round = 0
-    var converged = false
-    while (round < maxRounds && !converged) {
+    graft.Iterate.untilZero("minLabelComponents",
+        graft.Session.barrier(init.select(col("node"), col("label"))), maxRounds) { labels =>
       val messages = e.join(labels, e("dst") === labels("node"))
         .select(e("src").as("node"), col("label"), lit(false).as("own"))
-      // convergence rides the barrier's own checkpoint job via a
-      // [[graft.Session.zeroTestMarker]] (zero changed rows ⟺ fixpoint —
-      // a valid ==0 test), instead of a second count job per round.
       // null-safe: a node present in `edges` but absent from `init` has
       // prev=NULL on the round it first appears; `=!=` would yield NULL
       // there and under-count it as unchanged, declaring convergence
       // while its freshly-assigned label still needs to propagate
-      val (changedAcc, mark) = graft.Session.zeroTestMarker(spark)
-      val next = graft.Session.barrier(
+      graft.Iterate.Round(
         labels.select(col("node"), col("label"), lit(true).as("own"))
           .unionByName(messages)
           .groupBy(col("node"))
           .agg(min(col("label")).as("label"),
-               min(when(col("own"), col("label"))).as("prev"))
-          .withColumn("chg", mark(!(col("label") <=> col("prev")))))
-      labels = next.select(col("node"), col("label"))
-      converged = changedAcc.value == 0L
-      round += 1
+               min(when(col("own"), col("label"))).as("prev")),
+        test = !(col("label") <=> col("prev")), out = Seq("node", "label"))
     }
-    require(converged,
-      s"minLabelComponents did not converge after $maxRounds rounds; " +
-        "raise maxRounds (component diameter exceeds it)")
-    labels
   }
 
   /** Multi-source BFS distances (g10) — hop distance from a seed set,
@@ -429,16 +412,13 @@ object Graph {
       edges.select(col("u").as("src"), col("v").as("dst"))
         .unionByName(edges.select(col("v").as("src"), col("u").as("dst")))
         .distinct())
-    var dist = graft.Session.barrier(
+    val seeded = graft.Session.barrier(
       seeds.select(col("node"), lit(0L).as("dist")).distinct())
-    for (_ <- 1 to maxHops) {
+    graft.Iterate.fixed(maxHops, seeded, graft.Iterate.Cadence.EveryRound) { dist =>
       val msgs = e.join(dist, e("dst") === dist("node"))
         .select(e("src").as("node"), (col("dist") + 1L).as("dist"))
-      dist = graft.Session.barrier(
-        dist.unionByName(msgs).groupBy(col("node"))
-          .agg(min(col("dist")).as("dist")))
-    }
-    dist.orderBy(col("node"))
+      dist.unionByName(msgs).groupBy(col("node")).agg(min(col("dist")).as("dist"))
+    }.orderBy(col("node"))
   }
 
   /** Weighted single-source (multi-seed) shortest paths (g11) — min
@@ -466,16 +446,13 @@ object Graph {
       edges.select(col("u").as("src"), col("v").as("dst"), col("w"))
         .unionByName(edges.select(col("v").as("src"), col("u").as("dst"), col("w")))
         .groupBy(col("src"), col("dst")).agg(min(col("w")).as("w")))
-    var dist = graft.Session.barrier(
+    val seeded = graft.Session.barrier(
       seeds.select(col("node"), lit(0L).as("cost")).distinct())
-    for (_ <- 1 to maxEdges) {
+    graft.Iterate.fixed(maxEdges, seeded, graft.Iterate.Cadence.EveryRound) { dist =>
       val msgs = e.join(dist, e("src") === dist("node"))
         .select(e("dst").as("node"), (col("cost") + col("w")).as("cost"))
-      dist = graft.Session.barrier(
-        dist.unionByName(msgs).groupBy(col("node"))
-          .agg(min(col("cost")).as("cost")))
-    }
-    dist.orderBy(col("node"))
+      dist.unionByName(msgs).groupBy(col("node")).agg(min(col("cost")).as("cost"))
+    }.orderBy(col("node"))
   }
 
   /** Item-to-item collaborative filtering (g03): top-k item pairs by
@@ -597,9 +574,8 @@ object Graph {
     */
   def alternatingStarComponents(edgesRaw: DataFrame, nodes: DataFrame,
                                 maxRounds: Int = 30): DataFrame = {
-    val spark = edgesRaw.sparkSession
     // canonical child→parent start state: (hi, lo), self-loops dropped
-    var e = graft.Session.barrier(
+    val start = graft.Session.barrier(
       edgesRaw.select(
           greatest(col("u"), col("v")).as("c"),
           least(col("u"), col("v")).as("p"))
@@ -609,10 +585,8 @@ object Graph {
       val r = df.agg(count(lit(1)), sum(xxhash64(col("c"), col("p")))).head()
       (r.getLong(0), if (r.isNullAt(1)) 0L else r.getLong(1))
     }
-    var sig = signature(e)
-    var round = 0
-    var converged = false
-    while (round < maxRounds && !converged) {
+    val e = graft.Iterate.untilStable("alternatingStarComponents", start,
+        maxRounds)(signature) { e =>
       // large-star: m(u) = min over the SYMMETRIC neighborhood ∪ {u};
       // every strictly larger neighbor v re-points to m. Each edge (c,p)
       // survives from p's group (c ∈ Γ⁺(p)), so no adjacency is lost,
@@ -636,24 +610,15 @@ object Graph {
       // re-point to the minimum parent. The (c→m) union branch rides
       // the same pass as a 2-way explode.
       val wC = org.apache.spark.sql.expressions.Window.partitionBy(col("c"))
-      val small = graft.Session.barrier(
-        large
-          .withColumn("m", min(col("p")).over(wC))
-          .select(explode(array(
-              struct(col("p").as("a"), col("m").as("b")),
-              struct(col("c").as("a"), col("m").as("b")))).as("x"))
-          .select(col("x.a").as("c"), col("x.b").as("p"))
-          .where(col("c") =!= col("p"))
-          .distinct())
-      val nextSig = signature(small)
-      converged = nextSig == sig
-      sig = nextSig
-      e = small
-      round += 1
+      large
+        .withColumn("m", min(col("p")).over(wC))
+        .select(explode(array(
+            struct(col("p").as("a"), col("m").as("b")),
+            struct(col("c").as("a"), col("m").as("b")))).as("x"))
+        .select(col("x.a").as("c"), col("x.b").as("p"))
+        .where(col("c") =!= col("p"))
+        .distinct()
     }
-    require(converged,
-      s"alternatingStarComponents did not converge after $maxRounds rounds " +
-        "(O(log n) expected — raise maxRounds only for astronomically large n)")
     nodes.select(col("node"))
       .join(e.select(col("c").as("node"), col("p").as("label")), Seq("node"), "left")
       .select(col("node"), coalesce(col("label"), col("node")).as("label"))
@@ -668,6 +633,12 @@ object Graph {
     * precedent: bit-identical in every engine, so the oracle rebuilds
     * the same graph without sharing code.
     */
+  def docChainEdges(documents: DataFrame): DataFrame =
+    documents
+      .where(col("doc_id") > 0 &&
+        substring(md5(col("doc_id").cast("string").cast("binary")), 1, 2) =!= "ff")
+      .select(col("doc_id").as("u"), (col("doc_id") - 1).as("v"))
+
   /** G18: strongly connected components under a hop cap — the directed
     * sibling of [[alternatingStarComponents]], by the FW-BW principle
     * (Fleischer et al. 2000): v and w share an SCC iff each reaches the
@@ -695,15 +666,12 @@ object Graph {
     val back = ids.as("a").join(ids.as("b"), col("b.n") === col("a.n") - 4)
       .where(h1 === "a")
       .select(col("a.n").as("src"), col("b.n").as("dst"))
-    var r = graft.Session.barrier(
-      ids.select(col("n").as("src"), col("n").as("dst"))
-        .unionByName(chain).unionByName(back).distinct())
-    var round = 0
-    while (round < rounds) {
-      r = graft.Session.barrier(
-        r.as("x").join(r.as("y"), col("x.dst") === col("y.src"))
-          .select(col("x.src").as("src"), col("y.dst").as("dst")).distinct())
-      round += 1
+    val r = graft.Iterate.fixed(rounds, graft.Session.barrier(
+        ids.select(col("n").as("src"), col("n").as("dst"))
+          .unionByName(chain).unionByName(back).distinct()),
+        graft.Iterate.Cadence.EveryRound) { r =>
+      r.as("x").join(r.as("y"), col("x.dst") === col("y.src"))
+        .select(col("x.src").as("src"), col("y.dst").as("dst")).distinct()
     }
     val scc = r.as("f").join(r.as("b"),
         col("f.src") === col("b.dst") && col("f.dst") === col("b.src"))
@@ -716,12 +684,6 @@ object Graph {
         (col("scc_size") > 1).as("in_cycle"))
       .orderBy(col("node"))
   }
-
-  def docChainEdges(documents: DataFrame): DataFrame =
-    documents
-      .where(col("doc_id") > 0 &&
-        substring(md5(col("doc_id").cast("string").cast("binary")), 1, 2) =!= "ff")
-      .select(col("doc_id").as("u"), (col("doc_id") - 1).as("v"))
 
   /** Support-thresholded co-purchase graph: part pair (u < v) connected
     * iff they co-occur in ≥ `minSupport` orders — the standard market-
@@ -950,71 +912,39 @@ object Graph {
     * iteration — exactly where driver-side loop state must stay
     * metadata-sized.
     *
-    * Per round: one degree aggregate + two LEFT SEMI joins on the keep
-    * set, re-barriered so round N reads round N−1's materialization,
-    * not a 2^N-deep lineage ([[alternatingStarComponents]] discipline).
-    * The only driver value is the edge count (one long per round). Round
-    * count is bounded by the peel depth — O(n) pathological chains
-    * exist, so `maxRounds` fails loudly rather than spinning; real
+    * Per round: window degree counts over the symmetric edge list and
+    * the keep filter, re-barriered so round N reads round N−1's
+    * materialization, not a 2^N-deep lineage. Round count is bounded by
+    * the peel depth — O(n) pathological chains exist; real
     * co-occurrence graphs settle in ~10 rounds. At 100 TB each round is
     * two co-partitioned shuffles of the shrinking edge list — the peel
     * only ever deletes, so cost is monotone decreasing.
     */
   def kCore(edgesRaw: DataFrame, k: Int, maxRounds: Int = 64): DataFrame = {
     require(k >= 1, "kCore: k must be >= 1")
-    val spark = edgesRaw.sparkSession
-    var e = graft.Session.barrier(edgesRaw.select(col("u"), col("v")))
-    var converged = false
-    var rounds = 0
     val wU = org.apache.spark.sql.expressions.Window.partitionBy(col("u"))
     val wV = org.apache.spark.sql.expressions.Window.partitionBy(col("v"))
-    while (!converged && rounds < maxRounds) {
+    val core = graft.Iterate.untilZero("kCore",
+        graft.Session.barrier(edgesRaw.select(col("u"), col("v"))), maxRounds) { e =>
       // round-14: endpoint degrees attached by WINDOW counts over the
       // symmetric edge list (deg(x) = rows with x first ⟺ x second in
       // sym), replacing the degree-table build + two left_semi joins —
       // 2 exchanges per round instead of ~5 (guide §2.4). The peel only
-      // deletes, so fixpoint ⟺ zero edges dropped this round — counted
-      // by a [[graft.Session.zeroTestMarker]] evaluated on the PRE-filter
-      // rows during the barrier's checkpoint job (the nondeterministic
-      // marker blocks filter pushdown below its Project), replacing the
-      // per-round count job + driver-side edge-count bookkeeping.
-      // the marker column must SURVIVE into the checkpointed schema:
-      // selecting it away inside the barrier lets ColumnPruning delete
-      // the (side-effecting) projection wholesale — Spark assumes
-      // expressions are effect-free — so it is dropped only AFTER the
-      // barrier has materialized it
-      val (droppedAcc, mark) = graft.Session.zeroTestMarker(spark)
-      val e2 = graft.Session.barrier(
+      // deletes, so fixpoint ⟺ zero edges dropped this round.
+      val deg = col("du") >= k.toLong && col("dv") >= k.toLong
+      graft.Iterate.Round(
         e.select(col("u"), col("v"))
           .unionByName(e.select(col("v").as("u"), col("u").as("v")))
           .withColumn("du", count(lit(1)).over(wU))
-          .withColumn("dv", count(lit(1)).over(wV))
-          .withColumn("gone",
-            mark(col("u") < col("v") &&
-              !(col("du") >= k.toLong && col("dv") >= k.toLong)))
-          .where(col("u") < col("v") &&
-            col("du") >= k.toLong && col("dv") >= k.toLong)
-          .select(col("u"), col("v"), col("gone")))
-        .select(col("u"), col("v"))
-      converged = droppedAcc.value == 0L
-      e = e2
-      rounds += 1
+          .withColumn("dv", count(lit(1)).over(wV)),
+        test = col("u") < col("v") && !deg, out = Seq("u", "v"),
+        keep = Some(col("u") < col("v") && deg))
     }
-    require(converged, s"kCore: no fixpoint within $maxRounds rounds")
-    e.select(col("u").as("node")).unionByName(e.select(col("v").as("node")))
+    core.select(col("u").as("node")).unionByName(core.select(col("v").as("node")))
       .groupBy(col("node")).agg(count(lit(1)).as("core_deg"))
       .orderBy(col("node"))
   }
 
-  /** Per-edge triangle support over an undirected (u < v) edge list —
-    * the inner kernel of [[kTruss]]. Enumeration is degree-oriented
-    * (the [[triangleCensus]] trick: fanout arboricity-bounded, hubs
-    * receive edges instead of fanning out), each triangle is found
-    * exactly once, and its THREE undirected edges are credited by
-    * normalizing every directed pair back to (min, max) before the
-    * count aggregate. One wedge join + one closing join + one
-    * map-side-combinable aggregate — no edge-list self-join on raw ids.
-    */
   /** G19: coreness (core number) per node — the k-core sweep every
     * graph-ML feature stack computes (Batagelj–Zaversnik's output,
     * here as the honest bounded form): coreness(v) = max k ≤ `maxK`
@@ -1042,6 +972,15 @@ object Graph {
       .orderBy(col("node"))
   }
 
+  /** Per-edge triangle support over an undirected (u < v) edge list —
+    * the inner kernel of [[kTruss]]. Enumeration is degree-oriented
+    * (the [[triangleCensus]] trick: fanout arboricity-bounded, hubs
+    * receive edges instead of fanning out), each triangle is found
+    * exactly once, and its THREE undirected edges are credited by
+    * normalizing every directed pair back to (min, max) before the
+    * count aggregate. One wedge join + one closing join + one
+    * map-side-combinable aggregate — no edge-list self-join on raw ids.
+    */
   private def triangleEdgeSupport(undRaw: DataFrame): DataFrame = {
     // no barrier on the edge list itself: the only caller (kTruss)
     // always passes an already-checkpointed edge set, so re-checkpointing
@@ -1070,8 +1009,7 @@ object Graph {
     *
     * Peel loop: [[triangleEdgeSupport]] per round (degree-oriented,
     * re-oriented on the SHRINKING edge set each round), drop edges
-    * under k−2, re-barrier, repeat to fixpoint; the edge count is the
-    * only driver-side value per round ([[kCore]] discipline). At
+    * under k−2, re-barrier, repeat to fixpoint ([[kCore]] discipline). At
     * fixpoint the support column carried by the last filter IS the
     * final support (the edge set did not change), so the result needs
     * no extra enumeration. `maxRounds` is pinned to the oracle's unroll
@@ -1083,34 +1021,17 @@ object Graph {
     */
   def kTruss(edgesRaw: DataFrame, k: Int, maxRounds: Int = 16): DataFrame = {
     require(k >= 3, s"kTruss: k must be >= 3, got $k")
-    val spark = edgesRaw.sparkSession
-    var e = graft.Session.barrier(edgesRaw.select(col("u"), col("v")))
-    var kept: DataFrame = e.withColumn("support", lit(0L)) // k=3 empty-graph case
-    var converged = e.isEmpty
-    var rounds = 0
-    while (!converged && rounds < maxRounds) {
-      val sup = triangleEdgeSupport(e)
+    val start = graft.Session.barrier(edgesRaw.select(col("u"), col("v")))
+      .withColumn("support", lit(0L)) // empty graph: one round, support intact
+    graft.Iterate.untilZero("kTruss", start, maxRounds) { kept =>
+      val e = kept.select(col("u"), col("v"))
       // the peel only deletes, so fixpoint ⟺ zero edges dropped by the
-      // support filter — a [[graft.Session.zeroTestMarker]] on the
-      // PRE-filter rows rides the barrier's checkpoint job (kCore
-      // discipline), replacing the per-round count job.
-      // kCore discipline: the marker column must survive into the
-      // checkpointed schema or ColumnPruning deletes the side-effecting
-      // projection; dropped after the barrier
-      val (droppedAcc, mark) = graft.Session.zeroTestMarker(spark)
-      kept = graft.Session.barrier(
-        e.join(sup, Seq("u", "v"), "left")
-          .select(col("u"), col("v"),
-            coalesce(col("sup"), lit(0L)).as("support"))
-          .withColumn("gone", mark(col("support") < (k - 2).toLong))
-          .where(col("support") >= (k - 2).toLong))
-        .select(col("u"), col("v"), col("support"))
-      converged = droppedAcc.value == 0L
-      e = kept.select(col("u"), col("v"))
-      rounds += 1
-    }
-    require(converged, s"kTruss: no fixpoint within $maxRounds rounds")
-    kept.select(col("u"), col("v"), col("support"))
-      .orderBy(col("u"), col("v"))
+      // support filter
+      graft.Iterate.Round(
+        e.join(triangleEdgeSupport(e), Seq("u", "v"), "left")
+          .select(col("u"), col("v"), coalesce(col("sup"), lit(0L)).as("support")),
+        test = col("support") < (k - 2).toLong, out = Seq("u", "v", "support"),
+        keep = Some(col("support") >= (k - 2).toLong))
+    }.orderBy(col("u"), col("v"))
   }
 }

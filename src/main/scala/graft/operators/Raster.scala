@@ -301,8 +301,8 @@ object Raster {
     * back (was: explode-to-8 fold + left equi-join = 2 exchanges +
     * join per round; now 1 exchange per round). Rounds are a linear
     * chain (round N consumes only round N−1), so barriers drop to
-    * every `spark.graft.barrierInterval`-th round instead of every
-    * round — shuffle outputs cover intra-job retry between barriers.
+    * every 4th round ([[graft.Iterate.Cadence.EveryFourth]]) — shuffle
+    * outputs cover intra-job retry between barriers.
     */
   def fillSinks(grid: DataFrame, rounds: Int = 10,
                 ceiling: Long = 1000000000L): DataFrame = {
@@ -320,17 +320,16 @@ object Raster {
       .agg(count(lit(1)).as("n"), max($"cz").as("z"))
       .where($"z".isNotNull)
       .select($"variable", $"time", $"lat", $"lon", $"z", ($"n" === 9).as("interior"))
-    var w = base.select($"variable", $"time", $"lat",
+    val start = base.select($"variable", $"time", $"lat",
       $"lon", $"z", $"interior",
       when($"interior", lit(ceiling)).otherwise($"z").as("w"))
-    var round = 0
-    while (round < rounds) {
-      // primitive per-field aggregate slots (center z/interior/w by
-      // conditional max, neighbour min) keep the fold a codegen'd
-      // HashAggregate — the earlier struct-valued max buffer forced
-      // SortAggregate, i.e. a full extra sort of the ×9 exploded
-      // relation every round
-      val folded = w
+    // primitive per-field aggregate slots (center z/interior/w by
+    // conditional max, neighbour min) keep the fold a codegen'd
+    // HashAggregate — the earlier struct-valued max buffer forced
+    // SortAggregate, i.e. a full extra sort of the ×9 exploded
+    // relation every round
+    val w = graft.Iterate.fixed(rounds, start, graft.Iterate.Cadence.EveryFourth) { w =>
+      w
         .withColumn("dy", explode(sequence(lit(-1), lit(1))))
         .withColumn("dx", explode(sequence(lit(-1), lit(1))))
         .select($"variable", $"time",
@@ -346,8 +345,6 @@ object Raster {
           when($"interior",
             greatest($"z", least($"sw", $"nbr_min")))
             .otherwise($"z").as("w"))
-      round += 1
-      w = graft.Session.barrierEvery(round, folded)
     }
     w.select($"variable", $"time", $"lat", $"lon", $"z", $"w",
         ($"w" - $"z").as("fill"))
@@ -374,8 +371,7 @@ object Raster {
     * attain count and the confluence bump row-locally. Was: inflow
     * equi-join + (cell, ord) fold + argmax fold + left join back +
     * barrier per round (~5 exchanges); now 1 exchange per round,
-    * barriered every `spark.graft.barrierInterval`-th round (linear
-    * chain).
+    * barriered every 4th round (linear chain).
     */
   def strahlerOrder(grid: DataFrame, rounds: Int = 8): DataFrame = {
     val keys = Seq($"variable", $"time", $"lat", $"lon")
@@ -388,7 +384,7 @@ object Raster {
     // the grid simply has no self row at the fold, so its messages drop
     // there — same semantics as the old left_semi in-grid edge check,
     // without the build-time join)
-    var ord = fd.select($"variable", $"time", $"lat", $"lon",
+    val start = fd.select($"variable", $"time", $"lat", $"lon",
       when($"flow_code" > 0, $"lat" + latOff).as("tlat"),
       when($"flow_code" > 0, $"lon" + lonOff).as("tlon"),
       lit(1L).as("ord"))
@@ -396,13 +392,12 @@ object Raster {
     // grid's coord type is
     val nullSelf = when(lit(false), struct($"tlat", $"tlon"))
     val nullOrd = lit(null).cast("long")
-    var round = 0
-    while (round < rounds) {
-      // ONE scan of the state emits both the presence row and the
-      // order-message row (a 2-way explode, not a union of two
-      // projections — the union form consumes the state twice per round,
-      // which doubles the unbarriered plan per round)
-      val folded = ord
+    // ONE scan of the state emits both the presence row and the
+    // order-message row (a 2-way explode, not a union of two
+    // projections — the union form consumes the state twice per round,
+    // which doubles the unbarriered plan per round)
+    val ord = graft.Iterate.fixed(rounds, start, graft.Iterate.Cadence.EveryFourth) { ord =>
+      ord
         .select($"variable", $"time", explode(array(
             struct($"lat".as("lat"), $"lon".as("lon"), nullOrd.as("mord"),
               struct($"tlat", $"tlon").as("self")),
@@ -422,8 +417,6 @@ object Raster {
                 x => x === array_max($"inflows"))) >= 2,
                 array_max($"inflows") + 1L)
                 .otherwise(array_max($"inflows"))).as("ord"))
-      round += 1
-      ord = graft.Session.barrierEvery(round, folded)
     }
     ord.select($"variable", $"time", $"lat", $"lon", $"ord".as("strahler"))
       .orderBy(keys: _*)
@@ -609,9 +602,9 @@ object Raster {
     * of rounds.
     *
     * Scale shape: the r34 pass (barriered), one absorption left join,
-    * then `rounds` self-joins of the (cell → pointer) relation, each
-    * barriered — every row is four keys + two coords, constant size
-    * per round.
+    * then `rounds` self-joins of the (cell → pointer) relation, pinned
+    * between barriers ([[graft.Iterate.pinned]]) — every row is four keys
+    * + two coords, constant size per round.
     */
   def watershedBasins(grid: DataFrame, rounds: Int = 3): DataFrame = {
     require(rounds >= 1 && rounds <= 20, "watershedBasins: 1 <= rounds <= 20")
@@ -626,35 +619,32 @@ object Raster {
       $"lat".as("plat"), $"lon".as("plon"), lit(1).as("in_grid"))
     // pinned (round-14): parent0 seeds the pointer chain AND anchors the
     // final terminal lookup; each doubling state self-joins (consumed
-    // twice). All of it runs as ONE sealed job over scope-pinned caches
+    // twice). All of it runs as ONE sealed job over pinned states
     // instead of a checkpoint job per doubling.
-    val scope = new graft.Session.IterScope(grid.sparkSession)
-    val parent0 = scope.pin(fd
+    val parent0 = fd
       .select($"variable", $"time", $"lat", $"lon",
         when($"flow_code" > 0, $"lat" + dyC).otherwise($"lat").as("plat"),
         when($"flow_code" > 0, $"lon" + dxC).otherwise($"lon").as("plon"))
       .join(cells, Seq("variable", "time", "plat", "plon"), "left")
       .select($"variable", $"time", $"lat", $"lon",
         when($"in_grid".isNotNull, $"plat").otherwise($"lat").as("plat"),
-        when($"in_grid".isNotNull, $"plon").otherwise($"lon").as("plon")))
-    var ptr = parent0
-    for (round <- 1 to rounds) {
+        when($"in_grid".isNotNull, $"plon").otherwise($"lon").as("plon"))
+    graft.Iterate.pinned(rounds, parent0) { ptr =>
       val hop = ptr.select($"variable", $"time",
         $"lat".as("plat"), $"lon".as("plon"),
         $"plat".as("gplat"), $"plon".as("gplon"))
-      ptr = scope.state(round,
-        ptr.join(hop, Seq("variable", "time", "plat", "plon"))
-          .select($"variable", $"time", $"lat", $"lon",
-            $"gplat".as("plat"), $"gplon".as("plon")))
-    }
-    val term = parent0.select($"variable", $"time",
-      ($"plat" === $"lat" && $"plon" === $"lon").as("is_term"),
-      $"lat".as("plat"), $"lon".as("plon"))
-    scope.seal(ptr.join(term, Seq("variable", "time", "plat", "plon"))
+      ptr.join(hop, Seq("variable", "time", "plat", "plon"))
+        .select($"variable", $"time", $"lat", $"lon",
+          $"gplat".as("plat"), $"gplon".as("plon"))
+    } { ptr =>
+      val term = parent0.select($"variable", $"time",
+        ($"plat" === $"lat" && $"plon" === $"lon").as("is_term"),
+        $"lat".as("plat"), $"lon".as("plon"))
+      ptr.join(term, Seq("variable", "time", "plat", "plon"))
         .select($"variable", $"time", $"lat", $"lon",
           $"plat".as("basin_lat"), $"plon".as("basin_lon"),
-          $"is_term".as("at_outlet")))
-      .orderBy($"variable", $"time", $"lat", $"lon")
+          $"is_term".as("at_outlet"))
+    }.orderBy($"variable", $"time", $"lat", $"lon")
   }
 
   /** R11: regrid — block-mean downsampling by per-axis factors (the `cdo

@@ -3,18 +3,19 @@ package graft.sources
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets
 
-/** Minimal uncompressed GeoTIFF encoder/decoder — the last piece of K1:
+/** Minimal GeoTIFF encoder/decoder — the last piece of K1:
   * the reference's downstream contract is literally a `.tif` per layer
   * (`gdal_translate`/`gdalwarp` outputs, src/file-conversions.js:57-74),
   * and this produces one with zero GDAL dependency from the public specs
   * (Adobe TIFF 6.0 baseline + OGC GeoTIFF 1.1).
   *
-  * Scope: single-band Float32 grids, little-endian, one strip, no
-  * compression — the shape every GIS stack (GDAL, QGIS, rasterio) opens
-  * directly. Georeferencing is the standard plate-carrée trio:
-  * ModelPixelScale + ModelTiepoint (raster (0,0) edge → lon/lat) +
-  * a GeoKeyDirectory declaring geographic WGS-84 (EPSG 4326), plus the
-  * de-facto GDAL_NODATA ASCII tag.
+  * Scope: single-band Float32 grids, little-endian, one strip, LZW with
+  * the floating-point predictor by default (uncompressed on request) —
+  * the shape every GIS stack (GDAL, QGIS, rasterio) opens directly.
+  * Georeferencing is the standard plate-carrée trio: ModelPixelScale +
+  * ModelTiepoint (raster (0,0) edge → lon/lat) + a GeoKeyDirectory
+  * declaring geographic WGS-84 (EPSG 4326), plus the de-facto
+  * GDAL_NODATA ASCII tag.
   */
 object GeoTiff {
 

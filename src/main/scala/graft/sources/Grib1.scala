@@ -1,6 +1,6 @@
 package graft.sources
 
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.Path
 import java.time.LocalDateTime
 
 import org.apache.spark.sql.{DataFrame, Encoders, SparkSession}
@@ -423,11 +423,6 @@ object Grib1 {
   }
 
   /** Atomic write of encoded messages to a file. */
-  def writeFile(path: Path, fields: Seq[Field]): Path = {
-    Files.createDirectories(path.getParent)
-    val tmp = Files.createTempFile(path.getParent, path.getFileName.toString, ".tmp")
-    Files.write(tmp, write(fields))
-    Files.move(tmp, path, StandardCopyOption.ATOMIC_MOVE, StandardCopyOption.REPLACE_EXISTING)
-    path
-  }
+  def writeFile(path: Path, fields: Seq[Field]): Path =
+    graft.AtomicFile.write(path, write(fields))
 }

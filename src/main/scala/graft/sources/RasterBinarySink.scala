@@ -2,7 +2,7 @@ package graft.sources
 
 import java.nio.{ByteBuffer, ByteOrder}
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Paths, StandardCopyOption}
+import java.nio.file.{Files, Paths}
 import org.apache.spark.sql.{DataFrame, Encoders, Row}
 
 /** K1: binary raster export — the engine-native stand-in for the
@@ -81,7 +81,7 @@ object RasterBinarySink {
                          layout: Layout, nodata: Float): Unit = {
     val buf = ByteBuffer.allocate(arr.length * 4).order(ByteOrder.LITTLE_ENDIAN)
     arr.foreach(buf.putFloat)
-    atomicWrite(s"$outDir/$base.bin", buf.array())
+    graft.AtomicFile.write(Paths.get(s"$outDir/$base.bin"), buf.array())
     // ENVI header: pixel (1,1) is the top-left cell EDGE, so the map tie
     // point is the NW cell center shifted half a cell up-left
     val hdr =
@@ -98,39 +98,23 @@ object RasterBinarySink {
          |data ignore value = ${nodata.toDouble}
          |map info = {Geographic Lat/Lon, 1, 1, ${layout.lonMin - layout.cell / 2}, ${layout.latMax + layout.cell / 2}, ${layout.cell}, ${layout.cell}, WGS-84}
          |""".stripMargin
-    atomicWrite(s"$outDir/$base.hdr", hdr.getBytes(StandardCharsets.UTF_8))
+    graft.AtomicFile.write(Paths.get(s"$outDir/$base.hdr"), hdr.getBytes(StandardCharsets.UTF_8))
     val meta =
       s"""{"width": ${layout.width}, "height": ${layout.height},
          | "bbox": [${layout.bboxNWSE.mkString(", ")}],
          | "cell": ${layout.cell}, "nodata": ${nodata.toDouble},
          | "dtype": "float32", "byte_order": "little-endian",
          | "layout": "row-major north-to-south"}""".stripMargin.replace("\n", "")
-    atomicWrite(s"$outDir/$base.metadata.json", meta.getBytes(StandardCharsets.UTF_8))
+    graft.AtomicFile.write(Paths.get(s"$outDir/$base.metadata.json"),
+      meta.getBytes(StandardCharsets.UTF_8))
     // the reference's literal downstream contract is a .tif per layer
-    // (file-conversions.js:57-74) — emit a real uncompressed GeoTIFF
+    // (file-conversions.js:57-74) — emit a GeoTIFF (LZW + floating-point
+    // predictor, as `gdal_translate -co COMPRESS=LZW -co PREDICTOR=3`)
     // alongside the ENVI pair, same grid, same nodata
-    atomicWrite(s"$outDir/$base.tif", GeoTiff.encode(
+    graft.AtomicFile.write(Paths.get(s"$outDir/$base.tif"), GeoTiff.encode(
       layout.width, layout.height, arr,
       layout.lonMin - layout.cell / 2, layout.latMax + layout.cell / 2,
       layout.cell, layout.cell, nodata))
-  }
-
-  private def atomicWrite(path: String, bytes: Array[Byte]): Unit = {
-    val target = Paths.get(path)
-    // unique tmp per attempt: a retried/speculative task for the same layer
-    // must not interleave bytes into a shared ".tmp" before the move
-    val tmp = Files.createTempFile(target.getParent, target.getFileName.toString, ".tmp")
-    // createTempFile makes 0600 and ATOMIC_MOVE preserves it — these files
-    // are published for downstream GIS consumers, so open them to 0644
-    try Files.setPosixFilePermissions(tmp, java.util.EnumSet.of(
-      java.nio.file.attribute.PosixFilePermission.OWNER_READ,
-      java.nio.file.attribute.PosixFilePermission.OWNER_WRITE,
-      java.nio.file.attribute.PosixFilePermission.GROUP_READ,
-      java.nio.file.attribute.PosixFilePermission.OTHERS_READ))
-    catch { case _: UnsupportedOperationException => () /* non-POSIX FS */ }
-    Files.write(tmp, bytes)
-    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
   }
 
   /** Read one exported layer back (round-trip testing + a migration path

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import java.nio.charset.StandardCharsets
-import java.nio.file.{Files, Path, Paths, StandardCopyOption}
+import java.nio.file.{Files, Path, Paths}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
@@ -226,12 +226,6 @@ object SnapshotUpsert {
     else None
   }
 
-  private def switchPointer(dir: String, version: String): Unit = {
-    val target = Paths.get(dir, Pointer)
-    Files.createDirectories(target.getParent)
-    val tmp = Files.createTempFile(target.getParent, Pointer, ".tmp")
-    Files.write(tmp, version.getBytes(StandardCharsets.UTF_8))
-    Files.move(tmp, target, StandardCopyOption.ATOMIC_MOVE,
-      StandardCopyOption.REPLACE_EXISTING)
-  }
+  private def switchPointer(dir: String, version: String): Unit =
+    graft.AtomicFile.write(Paths.get(dir, Pointer), version.getBytes(StandardCharsets.UTF_8))
 }
