@@ -1724,6 +1724,7 @@ object SparkEntry {
         .writeStream
         .format("memory")
         .queryName("w18_out")
+        .option("checkpointLocation", s"$tmp/ckpt")
         .outputMode("complete")
         .trigger(Trigger.AvailableNow())
         .start()
@@ -1828,6 +1829,7 @@ object SparkEntry {
         .writeStream
         .format("memory")
         .queryName("w07_out")
+        .option("checkpointLocation", s"$tmp/ckpt")
         .outputMode("complete")
         .trigger(Trigger.AvailableNow())
         .start()
@@ -1871,6 +1873,7 @@ object SparkEntry {
         .writeStream
         .format("memory")
         .queryName("w12_out")
+        .option("checkpointLocation", s"$tmp/ckpt")
         .outputMode("complete")
         .trigger(Trigger.AvailableNow())
         .start()
@@ -1919,6 +1922,7 @@ object SparkEntry {
         .writeStream
         .format("memory")
         .queryName("w14_out")
+        .option("checkpointLocation", s"$tmp/ckpt")
         .outputMode("complete")
         .trigger(Trigger.AvailableNow())
         .start()

@@ -32,9 +32,9 @@ final class GridSource(grid: DataFrame, rootDir: String,
 
     keepalive()
 
-    // one slice serves all datasets of the cycle; at 100 TB the
-    // variable/year/month partition layout prunes this scan to one
-    // partition per variable
+    // one slice serves all datasets of the cycle; on the variable/year/month
+    // store, MonthPartitionPruning derives `year = Y AND month = M` from
+    // `time = cursor`, so this scan reads one partition per variable
     val monthSlice = grid.where(col("time") === cursorTs).cache()
     try {
       // P6: no-data short-circuit — month absent upstream: keep state, no

@@ -102,7 +102,16 @@ object GeoContains {
   * bbox never leave disk, and the exact ray cast only sees candidates.
   * Semantically a no-op: bbox is a superset of containment (a point
   * strictly outside every vertex's extent can cross no edge).
-  * Idempotent: the conjunct is only added when not already present, so the
+  *
+  * The rule also orders the condition so that every conjunct holding an
+  * `st_contains` comes after every conjunct that holds none, keeping the
+  * relative order otherwise: `FilterExec` short-circuits conjuncts in
+  * order, so the ray cast only sees rows that passed the bbox and every
+  * other cheap test (a month slice over a clipped grid no longer ray-casts
+  * every landed month). Deterministic conditions only, since reordering
+  * changes how often a non-deterministic conjunct is evaluated.
+  * Idempotent: a conjunct is only added when not already present and the
+  * condition is only rebuilt when that or the order changes, so the
   * optimizer's fixpoint loop terminates.
   */
 object GeoBboxPushdown
@@ -127,7 +136,12 @@ object GeoBboxPushdown
           preds.filterNot(p => conjuncts.exists(_.semanticEquals(p)))
         case _ => Nil
       }
-      if (additions.isEmpty) f
-      else Filter(additions.foldLeft(cond)(And(_, _)), child)
+      val all = conjuncts ++ additions
+      val (geo, cheap) =
+        if (cond.deterministic) all.partition(_.exists(_.isInstanceOf[GeoContains]))
+        else (Nil, all)
+      val ordered = cheap ++ geo
+      if (additions.isEmpty && ordered.corresponds(conjuncts)(_ eq _)) f
+      else Filter(ordered.reduce(And), child)
   }
 }

@@ -220,8 +220,11 @@ object GraftExtensions extends (SparkSessionExtensions => Unit) {
       FunctionIdentifier("nfc_normalize"),
       new ExpressionInfo(classOf[NfcNormalize].getName, "nfc_normalize"),
       (children: Seq[Expression]) => NfcNormalize(children.head)))
-    // containment ⇒ bbox: inject the pushable range prefilter (P2∘P3)
+    // containment ⇒ bbox: inject the pushable range prefilter (P2∘P3),
+    // and run the ray cast after the cheap conjuncts
     ext.injectOptimizerRule(_ => GeoBboxPushdown)
+    // `time` predicates prune the grid store's year/month partitions
+    ext.injectOptimizerRule(_ => MonthPartitionPruning)
   }
 }
 

@@ -10,10 +10,12 @@ import graft.implicits._
   * `(variable, time, lat, lon, value)` (SURVEY.md §1.1) — the Spark-native
   * re-expression of the reference's per-file GRIB/GeoTIFF kernels.
   *
-  * Layout contract: the grid is partitioned `variable/year/month` on disk,
-  * so the monthly-cursor access pattern (reference
+  * Layout contract: the grid is partitioned `variable/year/month` on disk
+  * ([[withMonthKeys]]), so the monthly-cursor access pattern (reference
   * src/sources/era5monthly.js:37-41) prunes to exactly one partition per
-  * cycle, and climatology scans prune to 30 partitions per calendar month.
+  * variable, and climatology scans prune to 30 partitions per calendar
+  * month: [[graft.functions.MonthPartitionPruning]] turns their `time`
+  * predicates into partition filters.
   */
 object Raster {
 
@@ -735,9 +737,11 @@ object Raster {
     * calendar-month slice: a conditional window-average per cell supplies
     * the normal, so the grid subtree is scanned once. (The alternative —
     * aggregate the normal separately and broadcast-join it onto the actual
-    * month — scans the grid twice; prefer it only when the store is
-    * partition-pruned parquet and the actual-month scan is one partition,
-    * as [[graft.control.GridSource]] does via [[graft.control.Normals]].)
+    * month — scans the grid twice; prefer it only when the store is the
+    * `variable/year/month` parquet layout, where
+    * [[graft.functions.MonthPartitionPruning]] prunes the actual-month scan
+    * to one partition and the normal's scan to its calendar month, as
+    * [[graft.control.GridSource]] does via [[graft.control.Normals]].)
     * Cells with no climatology coverage drop out, as an inner join would.
     */
   def anomaly(grid: DataFrame, variable: String, monthStart: String,
@@ -777,17 +781,28 @@ object Raster {
            count($"value").as("n_cells"))
       .orderBy($"variable")
 
+  /** The grid store's partition columns, outermost first. */
+  val PartitionColumns: Seq[String] = Seq("variable", "year", "month")
+
+  /** Add the grid store's `year`/`month` partition keys. Every writer of the
+    * store derives them here, so the store keeps the layout invariant
+    * `year = year(time)` and `month = month(time)`, with `time` a
+    * timestamp_ntz (keys independent of the session time zone).
+    * [[graft.functions.MonthPartitionPruning]] relies on it to prune those
+    * partitions from `time` predicates.
+    */
+  def withMonthKeys(grid: DataFrame): DataFrame =
+    grid.withColumn("year", year($"time")).withColumn("month", month($"time"))
+
   /** Write the grid with the at-scale layout: partitioned by
     * (variable, year, month), dynamic overwrite so re-running a month is
     * idempotent (the reference's atomic overwrite-by-month, T1).
     */
   def writePartitioned(grid: DataFrame, path: String): Unit =
-    grid
-      .withColumn("year", year($"time"))
-      .withColumn("month", month($"time"))
-      .repartition($"variable", $"year", $"month")
+    withMonthKeys(grid)
+      .repartition(PartitionColumns.map(col): _*)
       .write
-      .partitionBy("variable", "year", "month")
+      .partitionBy(PartitionColumns: _*)
       .option("partitionOverwriteMode", "dynamic")
       .mode("overwrite")
       .parquet(path)

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 import org.apache.spark.sql.types.StructType
+import graft.operators.Raster
 
 /** S7/T1 streaming flavor: the reference watches a directory and schedules
   * work per discovered file (chokidar on `sources/`, reference
@@ -37,13 +38,12 @@ object LandingIngest {
       .schema(schema)
       .parquet(landingDir)
       .transform(transform)
-      .withColumn("year", year(col("time")))
-      .withColumn("month", month(col("time")))
+      .transform(Raster.withMonthKeys)
       .writeStream
       .format("parquet")
       .option("path", outputDir)
       .option("checkpointLocation", checkpointDir)
-      .partitionBy("variable", "year", "month")
+      .partitionBy(Raster.PartitionColumns: _*)
       .trigger(trigger)
       .start()
 

@@ -135,6 +135,45 @@ class ShapefileSpec extends AnyFunSuite with Matchers {
     "<= 5.0".r.findAllIn(optimized).length shouldBe 2
   }
 
+  test("GeoBboxPushdown orders the ray cast after every other conjunct; a second pass is a no-op") {
+    val spark = TestSession.spark
+    import spark.implicits._
+    import org.apache.spark.sql.catalyst.expressions.PredicateHelper
+    import org.apache.spark.sql.catalyst.plans.logical.Filter
+    import graft.functions.{GeoBboxPushdown, GeoContains}
+    object Split extends PredicateHelper {
+      def apply(e: org.apache.spark.sql.catalyst.expressions.Expression) =
+        splitConjunctivePredicates(e)
+    }
+    val ring: Geo.Ring = Array((0.0, 0.0), (5.0, 0.0), (5.0, 5.0), (0.0, 5.0), (0.0, 0.0))
+    // the cheap test arrives after the containment, as a month slice over
+    // a clipped grid does
+    val df = spark.range(0, 10)
+      .selectExpr("cast(id as double) as lon", "cast(id % 7 as double) as lat", "id")
+      .where(GeoContains(Seq(ring))($"lon", $"lat"))
+      .where($"id" =!= 3L)
+    val optimized = df.queryExecution.optimizedPlan
+    val conds = optimized.collect { case f: Filter => f.condition }
+    conds should have length 1
+    val conjuncts = Split(conds.head)
+    val isGeo = conjuncts.map(_.exists(_.isInstanceOf[GeoContains]))
+    isGeo.count(identity) shouldBe 1
+    isGeo.last shouldBe true
+    // the 4 bbox bounds and the id test precede the ray cast
+    conjuncts.length should be >= 6
+    // the rule leaves its own output alone, and so does a whole second
+    // optimizer pass
+    (GeoBboxPushdown(optimized) eq optimized) shouldBe true
+    val again = spark.sessionState.optimizer.execute(optimized)
+    again.collect { case f: Filter => Split(f.condition).map(_.sql) } shouldBe
+      Seq(conjuncts.map(_.sql))
+    // semantics unchanged
+    val want = spark.range(0, 10)
+      .selectExpr("cast(id as double) as lon", "cast(id % 7 as double) as lat", "id")
+      .where(Geo.containsUdf(ring)($"lon", $"lat") && $"id" =!= 3L)
+    df.collect().map(_.getLong(2)).sorted shouldBe want.collect().map(_.getLong(2)).sorted
+  }
+
   test("parser round-trips a synthesized multi-part .shp byte-for-byte") {
     // build a spec-conformant two-record file: one 2-ring polygon (outer +
     // hole), one single-ring polygon — exercises offsets, part arrays, and
